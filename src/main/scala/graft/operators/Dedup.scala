@@ -789,9 +789,15 @@ object Dedup {
     * never data.
     *
     * Returns (node, label): every endpoint with the minimum id reachable
-    * from it — the component's canonical id. */
+    * from it — the component's canonical id.
+    *
+    * Contract: `aCol` and `bCol` must have the same data type — both
+    * endpoints land in the one node column. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20): DataFrame = {
+    val (aType, bType) = (pairs.schema(aCol).dataType, pairs.schema(bCol).dataType)
+    require(aType == bType, s"connectedComponents: $aCol ($aType) and $bCol " +
+      s"($bType) must have the same data type")
     // r14 OPT (guide §5 reuse): the bidirectional edge list is built by
     // EXPLODING each pair into its two directions in one pass — the old
     // union of two projections referenced the un-materialized `pairs`

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** S10 streaming half: incremental stream-session tracking with CUSTOM
@@ -118,18 +118,8 @@ object StreamingSessionize {
     * first-batch planning from `out.sparkSession`'s conf, so `out` must be
     * built on a session sized for channel-grain state ([[runSessions]]
     * builds it on Streaming.sessionWithStatePartitions(spark, 8)). */
-  def writeSessions(out: Dataset[Session], sinkPath: String): Unit = {
-    val sink = new Streaming.AppendOnceSink(sinkPath)
-    val q = out.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", sinkPath + ".ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: Dataset[Session], id: Long) =>
-        sink.append(b.toDF(), id)
-      }
-      .start()
-    q.awaitTermination()
-  }
+  def writeSessions(out: Dataset[Session], sinkPath: String): Unit =
+    Streaming.appendOnce(out.sparkSession, sinkPath)(_ => out.toDF())
 
   /** Finite-replay runner for the registered query: replays the events table
     * through [[sessions]] and returns the closed-session table.
@@ -175,8 +165,8 @@ object StreamingSessionize {
     Streaming.assertEventsTsType(spark, staged)
     // Session state is channel-grain — build the stream on a cloned
     // session with right-sized state partitions (see
-    // Streaming.withStatePartitions for the rationale and the race the
-    // clone avoids).
+    // Streaming.sessionWithStatePartitions for the rationale and the race
+    // the clone avoids).
     val ss = Streaming.sessionWithStatePartitions(spark, 8)
     val stream = ss.readStream.schema(graft.Schemas.events).parquet(staged)
       .withColumn("ts", col("ts").cast(TimestampType))

@@ -76,6 +76,11 @@ class DedupSpec extends SparkSpec {
     assert(rows(comps) === Set(
       Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L), Seq(4L, 1L),
       Seq(10L, 10L), Seq(11L, 10L)))
+    // Both endpoints land in one node column: mixed types are refused up
+    // front with the contract in the message.
+    val mixed = intercept[IllegalArgumentException](Dedup.connectedComponents(
+      Seq((1L, "2")).toDF("id_a", "id_b"), "id_a", "id_b"))
+    assert(mixed.getMessage.contains("must have the same data type"))
   }
 
   test("near-dup clusters: every doc labeled, canonical keeps, chain collapses") {
@@ -177,7 +182,7 @@ class DedupSpec extends SparkSpec {
     val df = (base ++ near).toDF("doc_id", "text")
     def run(): Seq[Seq[Any]] = sortedRows(
       Dedup.ngramJaccardPairs(df, "doc_id", "text", 3, 0.05))
-    val plain = run() // default cap 1024: no hot shingles, plain join
+    val plain = run() // default cap 16384: no hot shingles, plain join
     assert(plain.size === 12 * 11 / 2, "every pair shares the hot shingle")
     try {
       spark.conf.set("spark.graft.allpairs.hotDf", "4")
