@@ -78,32 +78,37 @@ object StatsPipeline {
 
   /** T3: regex phrase matching. For each message × phrase: optional
     * channel-filter regex, then count non-overlapping occurrences; keep rows
-    * with matches > 0 (PhraseExtractor.java:54-91). Each phrase is a
-    * constant-pattern branch (codegen-friendly `regexp_count`), unioned —
-    * phrase tables are tiny (~10 rows) so a per-phrase column beats a
-    * crossJoin with a non-constant pattern, and each branch scans the same
-    * cached/columnar input with pushdown intact.
+    * with matches > 0 (PhraseExtractor.java:54-91). One projection computes
+    * every phrase's constant-pattern `regexp_count` (codegen-friendly; a
+    * phrase's filter gates its count, so an excluded channel never runs the
+    * pattern) into an array of (phrase_name, matches) entries, and the
+    * entries with matches > 0 are exploded — one scan of the input
+    * whatever the phrase count, where a branch per phrase would rescan it
+    * per phrase. Phrase tables are tiny (~10 rows), so a per-phrase
+    * expression beats a crossJoin with a non-constant pattern.
     * Input needs: channel, plus `textCol`. Output: channel, phrase_name,
     * matches (per input row), plus passthrough columns.
     */
   def matchPhrases(messages: DataFrame, phrases: Seq[graft.Tables.Phrase],
                    textCol: String): DataFrame = {
     // An empty phrase table (T2 refresh may legitimately return none) means
-    // zero matches — never an empty-reduce crash inside a streaming batch.
-    val shaped = messages
-      .withColumn("phrase_name", lit(null).cast("string"))
-      .withColumn("matches", lit(0))
-    if (phrases.isEmpty) return shaped.filter(lit(false))
-    val branches = phrases.map { p =>
-      val base = messages
-        .withColumn("phrase_name", lit(p.name))
-        .withColumn("matches", regexp_count(col(textCol), lit(p.regex)))
-      p.channelFilter
-        .map(cf => base.filter(col("channel").rlike("(?i)" + cf)))
-        .getOrElse(base)
-        .filter(col("matches") > 0)
+    // zero matches — never an empty array type inside a streaming batch.
+    if (phrases.isEmpty)
+      return messages
+        .withColumn("phrase_name", lit(null).cast("string"))
+        .withColumn("matches", lit(0))
+        .filter(lit(false))
+    val hits = phrases.map { p =>
+      val n = regexp_count(col(textCol), lit(p.regex))
+      val gated = p.channelFilter
+        .fold(n)(cf => when(col("channel").rlike("(?i)" + cf), n).otherwise(lit(0)))
+      struct(lit(p.name).as("phrase_name"), gated.as("matches"))
     }
-    branches.reduce(_ unionByName _)
+    messages
+      .withColumn("_hit", explode(filter(array(hits: _*), h => h("matches") > 0)))
+      .withColumn("phrase_name", col("_hit.phrase_name"))
+      .withColumn("matches", col("_hit.matches"))
+      .drop("_hit")
   }
 
   /** A8: total matches per (channel, phrase_name) — a SUM, not a COUNT

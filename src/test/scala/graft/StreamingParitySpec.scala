@@ -25,6 +25,71 @@ class StreamingParitySpec extends SparkSpec {
       .withColumn("ts", timestamp_millis(col("ts_ms"))).drop("ts_ms")
   }
 
+  private def hfs(path: String): org.apache.hadoop.fs.FileSystem =
+    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
+      spark.sparkContext.hadoopConfiguration)
+
+  /** Batch ids in an additive sink's delta log. */
+  private def deltaLog(state: String): Seq[Long] = {
+    val d = new java.io.File(state + "/_delta")
+    Option(d.listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.matches("b\\d+")).map(_.drop(1).toLong).sorted
+  }
+
+  /** Drives an additive sink to a compaction batch: `CompactAt - 1`
+    * zero-valued copies of `delta` fill the delta log from batch `from`
+    * (so every total stays as the test states it), and `delta` itself is
+    * the batch that folds them into the base. Returns that batch's id and
+    * asserts the fold happened. Just before the compaction batch, the
+    * state dir is copied to `beforeFold` when one is given. */
+  private def compactWith(sink: Streaming.ParquetUpsertSink, state: String,
+                          delta: DataFrame, value: String, from: Long,
+                          beforeFold: Option[java.nio.file.Path] = None): Long = {
+    val zero = delta.withColumn(value, lit(0L))
+    (0 until Streaming.CompactAt - 1).foreach(i => sink.upsert(zero, from + i))
+    assert(deltaLog(state).size === Streaming.CompactAt - 1)
+    beforeFold.foreach(copyDir(java.nio.file.Paths.get(state), _))
+    val id = from + Streaming.CompactAt - 1
+    sink.upsert(delta, id)
+    assert(deltaLog(state).isEmpty, "the compaction batch must fold the delta log")
+    id
+  }
+
+  private def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
+    java.nio.file.Files.walk(src).forEach { p =>
+      val t = dst.resolve(src.relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+
+  private def deleteDir(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p))
+      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .forEach(java.nio.file.Files.delete(_))
+
+  /** Put an additive sink's state dir back into the on-disk shape a crash
+    * leaves when compaction batch `id` dies after swapping some leaves: the
+    * leaves in `unswapped` (absent if the batch created them), the delta
+    * log and both markers as they were before the batch (`beforeFold`),
+    * and the batch's attempt marker. */
+  private def crashMidCompaction(state: String, beforeFold: java.nio.file.Path,
+                                 id: Long, unswapped: Seq[String] = Nil): Unit = {
+    val dir = java.nio.file.Paths.get(state)
+    (unswapped :+ "_delta").foreach { rel =>
+      deleteDir(dir.resolve(rel))
+      if (java.nio.file.Files.exists(beforeFold.resolve(rel)))
+        copyDir(beforeFold.resolve(rel), dir.resolve(rel))
+    }
+    for (m <- Seq("_committed", "_folded")) {
+      java.nio.file.Files.deleteIfExists(dir.resolve(m))
+      java.nio.file.Files.deleteIfExists(dir.resolve(s".$m.crc"))
+      if (java.nio.file.Files.exists(beforeFold.resolve(m)))
+        java.nio.file.Files.copy(beforeFold.resolve(m), dir.resolve(m))
+    }
+    hfs(state).create(new org.apache.hadoop.fs.Path(state + s".attempt$id"), true).close()
+  }
+
   test("update-mode stream over arbitrary micro-batches equals batch run") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -147,11 +212,12 @@ class StreamingParitySpec extends SparkSpec {
     val many = (0 until 100).map(i => (s"k$i", 1L))
     sink.upsert(many.toDF("k", "v"), 0L) // initial write: no probe needed
     val before = Streaming.epochProbeListings.get()
-    sink.upsert(many.toDF("k", "v"), 1L) // touches all 100 partitions
+    // The compaction batch swaps all 100 partitions.
+    val c = compactWith(sink, base + "/state", many.toDF("k", "v"), "v", 1L)
     assert(Streaming.epochProbeListings.get() - before === 0L,
       "an uncrashed upsert must never probe epochs (no listings, no reads)")
     // And the attempt marker does not linger after a committed batch.
-    assert(!new java.io.File(base + "/state.attempt1").exists())
+    assert(!new java.io.File(base + s"/state.attempt$c").exists())
     assert(rows(sink.state(spark).get.filter(col("k") === "k42")) ===
       Set(Seq("k42", 2L)))
   }
@@ -164,7 +230,8 @@ class StreamingParitySpec extends SparkSpec {
       Seq("k"), Seq("v"), additive = true)
     val many = (0 until n).map(i => (s"k$i", 1L))
     sink.upsert(many.toDF("k", "v"), 0L)
-    sink.upsert(many.toDF("k", "v"), 1L) // > threshold → broadcast semi-join
+    // The compaction touches all of them: > threshold → broadcast semi-join.
+    compactWith(sink, base + "/state", many.toDF("k", "v"), "v", 1L)
     val st = sink.state(spark).get
     assert(st.count() === n.toLong)
     assert(rows(st.filter(col("k").isin("k0", s"k${n - 1}"))) ===
@@ -183,7 +250,8 @@ class StreamingParitySpec extends SparkSpec {
     val rows300 = for { c <- 0 until 30; b <- 0 until 10 }
       yield (s"c$c", b * 100L + 5L, 1L)
     sink.upsert(rows300.toDF("channel", "ts", "messages"), 0L)
-    sink.upsert(rows300.toDF("channel", "ts", "messages"), 1L)
+    compactWith(sink, base + "/state", rows300.toDF("channel", "ts", "messages"),
+      "messages", 1L)
     val st = sink.state(spark).get
     assert(st.count() === 300L)
     assert(rows(st.filter(col("channel") === "c7" && col("ts") === 305L)) ===
@@ -199,18 +267,18 @@ class StreamingParitySpec extends SparkSpec {
     val sink = new Streaming.ParquetUpsertSink(base + "/state",
       Seq("channel", "ts"), Seq("messages"), additive = true)
     sink.upsert(Seq(("a:b", 1L, 10L)).toDF("channel", "ts", "messages"), 0L)
-    sink.upsert(Seq(("a:b", 1L, 1L)).toDF("channel", "ts", "messages"), 1L)
+    val snap = java.nio.file.Paths.get(base, "before-fold")
+    val c = compactWith(sink, base + "/state",
+      Seq(("a:b", 1L, 1L)).toDF("channel", "ts", "messages"), "messages", 1L,
+      Some(snap))
     assert(rows(sink.state(spark).get) === Set(Seq("a:b", 1L, 11L)))
     assert(new java.io.File(base + "/state/channel=a%3Ab").isDirectory)
 
-    val hfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(base + "/state"), spark.sparkContext.hadoopConfiguration)
-    val out = hfs.create(
-      new org.apache.hadoop.fs.Path(base + "/state/_committed"), true)
-    out.write("0".getBytes("UTF-8")); out.close()
-    hfs.create(new org.apache.hadoop.fs.Path(base + "/state.attempt1"), true)
-      .close()
-    sink.upsert(Seq(("a:b", 1L, 1L)).toDF("channel", "ts", "messages"), 1L)
+    // Crash after the compaction's swap, before `_folded` and `_committed`
+    // advance: the swapped leaf carries the batch epoch, the deltas are
+    // still logged.
+    crashMidCompaction(base + "/state", snap, c)
+    sink.upsert(Seq(("a:b", 1L, 1L)).toDF("channel", "ts", "messages"), c)
     assert(rows(sink.state(spark).get) === Set(Seq("a:b", 1L, 11L)),
       "escaped-dir epoch must be recognized: replay may not double-add")
   }
@@ -340,60 +408,40 @@ class StreamingParitySpec extends SparkSpec {
   test("partial mid-swap crash: only a subset of partitions carry the new epoch; replay completes the rest exactly once") {
     import spark.implicits._
     val base = tmp("graft-partial")
-    val stateDir = java.nio.file.Paths.get(base, "state")
     val sink = new Streaming.ParquetUpsertSink(base + "/state",
       Seq("channel", "ts"), Seq("messages"), additive = true)
     sink.upsert(Seq(("a", 1L, 10L), ("b", 1L, 5L))
       .toDF("channel", "ts", "messages"), 0L)
 
-    // Snapshot partition b BEFORE batch 1 (still carrying _epoch_0).
-    def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      java.nio.file.Files.walk(src).forEach { p =>
-        val t = dst.resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    val bSnap = java.nio.file.Paths.get(base, "b-snap")
-    copyDir(stateDir.resolve("channel=b"), bSnap)
-
-    sink.upsert(Seq(("a", 1L, 1L), ("b", 1L, 2L))
-      .toDF("channel", "ts", "messages"), 1L)
+    // Snapshot the state dir BEFORE the compaction batch (partition b
+    // still carrying _epoch_0, the fillers still logged).
+    val snap = java.nio.file.Paths.get(base, "before-fold")
+    val c = compactWith(sink, base + "/state", Seq(("a", 1L, 1L), ("b", 1L, 2L))
+      .toDF("channel", "ts", "messages"), "messages", 1L, Some(snap))
     val afterB1 = rows(sink.state(spark).get)
     assert(afterB1 === Set(Seq("a", 1L, 11L), Seq("b", 1L, 7L)))
 
-    // Simulate a crash MID-swap-loop of batch 1: partition a was swapped
-    // (carries _epoch_1) but partition b was not (restore its batch-0
-    // content + _epoch_0), and _committed never advanced past batch 0.
-    def deleteDir(p: java.nio.file.Path): Unit =
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(java.nio.file.Files.delete(_))
-    deleteDir(stateDir.resolve("channel=b"))
-    copyDir(bSnap, stateDir.resolve("channel=b"))
-    val hfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(base + "/state"), spark.sparkContext.hadoopConfiguration)
-    val out = hfs.create(
-      new org.apache.hadoop.fs.Path(base + "/state/_committed"), true)
-    out.write("0".getBytes("UTF-8")); out.close()
-    // A crash mid-swap leaves the batch's attempt marker behind — that is
-    // what tells the replay to probe epochs at all.
-    hfs.create(new org.apache.hadoop.fs.Path(base + "/state.attempt1"), true)
-      .close()
+    // Simulate a crash MID-swap-loop of the compaction batch: partition a
+    // was swapped (carries the batch's epoch) but partition b was not
+    // (restore its batch-0 content + _epoch_0), the deltas are still
+    // logged, and neither `_folded` nor `_committed` advanced. A crash
+    // mid-swap leaves the batch's attempt marker behind — that is what
+    // tells the replay to probe epochs at all.
+    crashMidCompaction(base + "/state", snap, c, unswapped = Seq("channel=b"))
     assert(rows(sink.state(spark).get) ===
       Set(Seq("a", 1L, 11L), Seq("b", 1L, 5L))) // the torn on-disk state
 
-    // Replay of batch 1 must apply ONLY to b (a's epoch says done):
+    // Replay of the batch must apply ONLY to b (a's epoch says done):
     // exactly-once completion, no double-add on a — and the epoch probe
     // runs exactly ONCE (one recursive listing), not per partition.
     val probesBefore = Streaming.epochProbeListings.get()
     sink.upsert(Seq(("a", 1L, 1L), ("b", 1L, 2L))
-      .toDF("channel", "ts", "messages"), 1L)
+      .toDF("channel", "ts", "messages"), c)
     assert(Streaming.epochProbeListings.get() - probesBefore === 1L)
     assert(rows(sink.state(spark).get) === afterB1)
 
     // And the next batch still applies normally.
-    sink.upsert(Seq(("b", 1L, 100L)).toDF("channel", "ts", "messages"), 2L)
+    sink.upsert(Seq(("b", 1L, 100L)).toDF("channel", "ts", "messages"), c + 1)
     assert(rows(sink.state(spark).get) ===
       Set(Seq("a", 1L, 11L), Seq("b", 1L, 107L)))
   }
@@ -405,30 +453,153 @@ class StreamingParitySpec extends SparkSpec {
       Seq("channel", "ts"), Seq("messages"), additive = true)
     sink.upsert(Seq(("a", 1L, 10L), ("b", 1L, 5L))
       .toDF("channel", "ts", "messages"), 0L)
-    sink.upsert(Seq(("a", 1L, 1L), ("b", 1L, 2L))
-      .toDF("channel", "ts", "messages"), 1L)
+    val snap = java.nio.file.Paths.get(base, "before-fold")
+    val c = compactWith(sink, base + "/state", Seq(("a", 1L, 1L), ("b", 1L, 2L))
+      .toDF("channel", "ts", "messages"), "messages", 1L, Some(snap))
     val afterB1 = rows(sink.state(spark).get)
     assert(afterB1 === Set(Seq("a", 1L, 11L), Seq("b", 1L, 7L)))
 
-    // Simulate a crash AFTER batch 1's partition swaps but BEFORE the
-    // global _committed write: roll the marker back to batch 0. The
-    // partition dirs still carry _epoch=1, so the replay must skip them —
-    // without epochs this replay would double-add (a -> 12, b -> 9).
-    val hfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(base + "/state"), spark.sparkContext.hadoopConfiguration)
-    val out = hfs.create(
-      new org.apache.hadoop.fs.Path(base + "/state/_committed"), true)
-    out.write("0".getBytes("UTF-8")); out.close()
-    hfs.create(new org.apache.hadoop.fs.Path(base + "/state.attempt1"), true)
-      .close() // a crashed attempt leaves its marker
+    // Simulate a crash AFTER the compaction's partition swaps but BEFORE
+    // the `_folded` and global `_committed` writes: the deltas are still
+    // logged and the markers are back where they were (a crashed attempt
+    // leaves its marker). The partition dirs carry the batch's epoch, so
+    // the replay must skip them — without epochs this replay would
+    // double-add (a -> 12, b -> 9).
+    crashMidCompaction(base + "/state", snap, c)
     sink.upsert(Seq(("a", 1L, 1L), ("b", 1L, 2L))
-      .toDF("channel", "ts", "messages"), 1L)
+      .toDF("channel", "ts", "messages"), c)
     assert(rows(sink.state(spark).get) === afterB1)
 
     // And a genuinely new batch still applies normally afterwards.
-    sink.upsert(Seq(("a", 1L, 100L)).toDF("channel", "ts", "messages"), 2L)
+    sink.upsert(Seq(("a", 1L, 100L)).toDF("channel", "ts", "messages"), c + 1)
     assert(rows(sink.state(spark).get) ===
       Set(Seq("a", 1L, 111L), Seq("b", 1L, 7L)))
+  }
+
+  test("additive upsert writes O(delta): the bytes of one batch do not grow with history") {
+    import spark.implicits._
+    val delta = (0 until 8).map(c => (s"c$c", s"e${c % 3}", 1L))
+      .toDF("channel", "emote", "occurrences")
+    def written(history: Int): Long = {
+      val state = tmp("graft-odelta") + "/state"
+      val sink = new Streaming.ParquetUpsertSink(state, Seq("channel", "emote"),
+        Seq("occurrences"), additive = true)
+      sink.upsert((0 until 2000 * history).map(i => (s"c${i % 8}", s"e$i", 1L))
+        .toDF("channel", "emote", "occurrences"), 0L)
+      def dataFiles: Map[String, Long] = {
+        val it = java.nio.file.Files.walk(java.nio.file.Paths.get(state)).iterator()
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filter(p => p.getFileName.toString.startsWith("part-"))
+          .map(p => p.toString -> java.nio.file.Files.size(p)).toMap
+      }
+      val before = dataFiles
+      sink.upsert(delta, 1L)
+      assert(rows(sink.state(spark).get.filter(col("emote") === "e1")) ===
+        Set(Seq("c1", "e1", 2L), Seq("c4", "e1", 1L), Seq("c7", "e1", 1L)))
+      dataFiles.filter { case (f, _) => !before.contains(f) }.values.sum
+    }
+    val one = written(1)
+    val four = written(4)
+    assert(one > 0 && math.abs(four - one) <= one / 10,
+      s"one batch wrote $one B over 1x history and $four B over 4x history")
+  }
+
+  test("crash between the delta rename and _committed: the replay never double-counts") {
+    import spark.implicits._
+    val state = tmp("graft-dcrash") + "/state"
+    val sink = new Streaming.ParquetUpsertSink(state, Seq("k"), Seq("v"), additive = true)
+    sink.upsert(Seq(("x", 1L), ("y", 2L)).toDF("k", "v"), 0L)
+    val b1 = Seq(("x", 10L)).toDF("k", "v")
+    sink.upsert(b1, 1L)
+    assert(rows(sink.state(spark).get) === Set(Seq("x", 11L), Seq("y", 2L)))
+
+    // The crashed attempt logged its delta but never advanced `_committed`.
+    val out = hfs(state).create(new org.apache.hadoop.fs.Path(state + "/_committed"), true)
+    out.write("0".getBytes("UTF-8")); out.close()
+    assert(deltaLog(state) === Seq(1L))
+    assert(rows(sink.state(spark).get) === Set(Seq("x", 1L), Seq("y", 2L)),
+      "a logged delta stays invisible until its batch commits")
+
+    sink.upsert(b1, 1L) // the replay overwrites the logged delta
+    assert(deltaLog(state) === Seq(1L))
+    assert(rows(sink.state(spark).get) === Set(Seq("x", 11L), Seq("y", 2L)))
+    sink.upsert(Seq(("y", 5L)).toDF("k", "v"), 2L)
+    assert(rows(sink.state(spark).get) === Set(Seq("x", 11L), Seq("y", 7L)))
+  }
+
+  test("crash mid-compaction: the next upsert completes the fold, state equals the one-shot sum") {
+    import spark.implicits._
+    val base = tmp("graft-foldcrash")
+    val state = base + "/state"
+    val sink = new Streaming.ParquetUpsertSink(state, Seq("channel", "ts"),
+      Seq("messages"), additive = true, tsBucket = Some(("ts", 100L)))
+    val rnd = new scala.util.Random(7)
+    val batches = (0 to Streaming.CompactAt).map { _ =>
+      (0 until 40).map(_ => (s"c${rnd.nextInt(4)}", rnd.nextInt(600).toLong,
+        1L + rnd.nextInt(9))).toDF("channel", "ts", "messages")
+        .groupBy("channel", "ts").agg(sum("messages").as("messages"))
+    }
+    val c = Streaming.CompactAt.toLong
+    batches.init.zipWithIndex.foreach { case (b, i) => sink.upsert(b, i.toLong) }
+    val snap = java.nio.file.Paths.get(base, "before-fold")
+    copyDir(java.nio.file.Paths.get(state), snap)
+    sink.upsert(batches.last, c)
+    assert(deltaLog(state).isEmpty)
+
+    // Every second leaf of the folded table goes back to its pre-fold
+    // content (or away, if the fold created it); the others keep the
+    // batch's epoch.
+    val leaves = for {
+      ch <- new java.io.File(state).listFiles().toSeq if ch.getName.startsWith("channel=")
+      b <- ch.listFiles().toSeq if b.getName.startsWith("ts_bucket=")
+    } yield s"${ch.getName}/${b.getName}"
+    val unswapped = leaves.sorted.zipWithIndex.collect { case (l, i) if i % 2 == 0 => l }
+    assert(unswapped.nonEmpty && unswapped.size < leaves.size)
+    crashMidCompaction(state, snap, c, unswapped)
+
+    val probesBefore = Streaming.epochProbeListings.get()
+    sink.upsert(batches.last, c)
+    assert(Streaming.epochProbeListings.get() - probesBefore === 1L)
+    assert(deltaLog(state).isEmpty && !new java.io.File(state + s".attempt$c").exists())
+    val oneShot = batches.reduce(_ unionByName _).groupBy("channel", "ts")
+      .agg(sum("messages").cast("long").as("messages"))
+    assertSameRows(sink.state(spark).get, oneShot)
+  }
+
+  test("read-your-writes across commits: state equals the oracle; a superseded snapshot is unpersisted") {
+    import spark.implicits._
+    val state = tmp("graft-ryw") + "/state"
+    val sink = new Streaming.ParquetUpsertSink(state, Seq("k"), Seq("v"), additive = true)
+    val rnd = new scala.util.Random(11)
+    val total = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+    var prev: Option[DataFrame] = None
+    for (id <- 0L to Streaming.CompactAt + 2L) {
+      val b = (0 until 10).map(i => (s"k$i", rnd.nextInt(5).toLong)).filter(_._2 > 0)
+      sink.upsert(b.toDF("k", "v"), id)
+      b.foreach { case (k, v) => total(k) += v }
+      prev.foreach(p => assert(p.storageLevel ===
+        org.apache.spark.storage.StorageLevel.NONE, s"snapshot kept after batch $id"))
+      val st = sink.state(spark).get
+      assert(rows(st) === total.map { case (k, v) => Seq(k, v) }.toSet, s"batch $id")
+      if (deltaLog(state).nonEmpty) {
+        assert(st.storageLevel === org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        assert(sink.state(spark).get eq st, "reads before the next commit reuse the snapshot")
+      }
+      prev = Some(st)
+    }
+  }
+
+  test("replace-mode upsert on existing state leaves no persisted RDD behind") {
+    import spark.implicits._
+    val sink = new Streaming.ParquetUpsertSink(tmp("graft-replpersist") + "/state",
+      Seq("channel", "ts"), Seq("messages"), additive = false)
+    sink.upsert(Seq(("a", 1L, 10L), ("b", 1L, 5L)).toDF("channel", "ts", "messages"), 0L)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    sink.upsert(Seq(("a", 1L, 3L)).toDF("channel", "ts", "messages"), 1L)
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after.size <= before.size && (after -- before).isEmpty,
+      s"the merge left persisted RDDs ${after -- before}")
+    assert(rows(sink.state(spark).get) === Set(Seq("a", 1L, 3L), Seq("b", 1L, 5L)))
   }
 
   test("events later than the watermark are dropped (documented divergence)") {

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * into single-file micro-batches only in `Streaming.sliceLanding`, and a
   * committed-batch marker file is read and written only by
   * `Streaming.BatchMarker`. A new runner that hand-rolls any of these fails
-  * here instead of re-growing a private copy of the scaffold. */
+  * here instead of re-growing a private copy of the scaffold. Lineage is
+  * cut (`localCheckpoint`) only where a point-in-time snapshot is the
+  * point: the emote dictionary of `EmoteProviders`. */
 class StreamingScaffoldSpec extends AnyFunSuite {
 
   /** (file, enclosing member, code) for every line of the package's
@@ -48,6 +50,11 @@ class StreamingScaffoldSpec extends AnyFunSuite {
   test("tables are cut into single-file micro-batches only in sliceLanding") {
     for (token <- Seq("maxFilesPerTrigger", ".coalesce(1)"))
       assert(membersUsing(token) === Set("Streaming.scala:sliceLanding"), token)
+  }
+
+  test("localCheckpoint appears only in EmoteProviders' point-in-time snapshot") {
+    val files = code.collect { case (file, _, line) if line.contains("localCheckpoint") => file }
+    assert(files.toSet === Set("EmoteProviders.scala"))
   }
 
   test("committed-batch marker files are read and written only by BatchMarker") {
